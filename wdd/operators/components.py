@@ -1,30 +1,60 @@
 """J4 — connected components over the candidate-pair graph.
 
-Primary algorithm: the alternating large-star / small-star edge contraction
-(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14),
-the standard shuffle-friendly CC for massive graphs:
+`connected_components` deduplicates the edge list, materializes it once and
+counts it, then picks one of two paths by that edge count:
 
-  large-star: every node attaches its strictly-larger neighbors to the
-              minimum of its closed neighborhood;
-  small-star: every node attaches its smaller-or-equal neighbors (and itself)
-              to that minimum.
+* At most DRIVER_CC_MAX_EDGES edges: the (a, b) pairs are collected over
+  Arrow (16 B per edge) and labeled on the driver by `label_components`, a
+  numpy union-find that hooks roots onto smaller roots and shortcuts with
+  pointer jumping (Shiloach-Vishkin style). The labels come back as a small
+  local frame. One collect replaces the star path's per-contraction jobs,
+  which on small graphs cost driver round trips, not data work.
+  CCResult.iterations counts hooking rounds.
 
-Alternating the two converges in O(log n) rounds to a forest of stars whose
-centers are the component minima. Each round is one groupBy + one join over
-the current edge list — no per-node iteration, no long-chain stalls (plain
-hash-min label propagation needs O(chain length) rounds on random-id chains,
-measured 15+ rounds on the sf0.1 near-dup graph vs 4-6 here).
+* Above the bound: the alternating large-star / small-star edge contraction
+  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+  the standard shuffle-friendly CC for graphs larger than driver memory:
 
-Every round localCheckpoints the edge list to cut lineage (SURVEY.md §4.3);
-convergence = small-star output identical to its input (count + exceptAll).
+    large-star: every node attaches its strictly-larger neighbors to the
+                minimum of its closed neighborhood;
+    small-star: every node attaches its smaller-or-equal neighbors (and
+                itself) to that minimum.
+
+  Alternating the two converges in O(log n) rounds to a forest of stars
+  whose centers are the component minima. Each round is one groupBy + one
+  join over the current edge list — no per-node iteration, no long-chain
+  stalls (plain hash-min label propagation needs O(chain length) rounds on
+  random-id chains, measured 15+ rounds on the sf0.1 near-dup graph vs 4-6
+  here). Every contraction localCheckpoints the edge list to cut lineage
+  (SURVEY.md §4.3); convergence = the edge-set signature (count + two
+  64-bit hash sums) of a sync equal to the previous sync's.
+  CCResult.iterations counts executed contraction rounds.
+
+Both paths label every vertex with the minimum id of its component, so
+their labels are identical.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from wdd.operators.pairs import drop_checkpoint_blocks
+
+# Largest deduplicated edge count labeled on the driver. Measured on a
+# 4-core host at local[4], random graphs of mean degree 2, call plus one
+# aggregate over the labels, driver path vs star path:
+#   1e4 edges: 0.55 s vs 6.9 s     1e5 edges: 1.0-1.9 s vs 11.4-12.3 s
+#   1e6 edges: 6.5-12.3 s vs 46-49 s    2e6 edges: 11.7-12.4 s vs (not run)
+# The driver path wins at every size, so driver memory sets the bound:
+# peak driver Python RSS was 272 MB at 1e6 edges and 403 MB at 2e6, and
+# the labels are held in the driver JVM as a local relation (~2 rows per
+# edge at most). Larger graphs take the star path.
+DRIVER_CC_MAX_EDGES = 2_000_000
 
 
 @dataclass
@@ -56,6 +86,53 @@ def _unpersist_rdds(sc, ids: set[int]) -> None:
                 r.unpersist(False)
     except Exception:
         pass
+
+
+def label_components(a: np.ndarray, b: np.ndarray
+                     ) -> tuple[np.ndarray, np.ndarray, int]:
+    """Connected components of the graph with edges (a[i], b[i]).
+
+    Returns (ids, labels, rounds): every distinct endpoint id in ascending
+    order, the minimum id of its component, and the number of hooking
+    rounds. Each round hooks, for every edge whose endpoints sit under
+    different roots, the larger root onto the smallest root it touches,
+    then pointer-jumps until every vertex points at a root. Parents only
+    ever decrease, so the trees stay acyclic and each root is its
+    component's minimum dense index — which is the minimum id, because
+    np.unique sorts. Random-id cycles of 1e5 and 1e6 edges took 10 and 13
+    rounds; plain min-label propagation needs O(diameter) rounds."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[:len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    rounds = 0
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        rounds += 1
+        # an edge inside one tree stays inside one tree: drop it for good
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return ids, ids[parent], rounds
+
+
+def _with_isolated(labels: DataFrame, vertices: DataFrame | None
+                   ) -> DataFrame:
+    """(id, label) plus every vertex absent from `labels` as its own
+    component, renamed to (id, cluster_id)."""
+    if vertices is not None:
+        isolated = (vertices.select(F.col("id").cast("long").alias("id"))
+                    .dropDuplicates(["id"])
+                    .join(labels.select("id"), "id", "left_anti")
+                    .withColumn("label", F.col("id")))
+        labels = labels.union(isolated)
+    return labels.withColumnRenamed("label", "cluster_id")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -101,7 +178,11 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     rounds_per_sync) — an upper bound on the rounds the graph needed, since
     the fixpoint may be reached partway through a chained sync. max_iter
     bounds sync points, so at most rounds_per_sync * max_iter contractions
-    run."""
+    run.
+
+    Graphs of at most DRIVER_CC_MAX_EDGES deduplicated edges are labeled
+    on the driver instead (module docstring); max_iter and rounds_per_sync
+    apply to the star path only."""
     sc = edges.sparkSession.sparkContext
     baseline = _persistent_rdd_ids(sc)
     e = (edges.select(F.col("a").cast("long").alias("a"),
@@ -123,8 +204,20 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
         ).collect()[0]
         return (row.n, row.h1, row.h2)
 
-    iterations, converged = 0, False
     prev_sig = _signature(e)
+    if prev_sig[0] <= DRIVER_CC_MAX_EDGES:
+        edge_table = e.toArrow()
+        ids, mins, rounds = label_components(
+            edge_table.column("a").to_numpy(),
+            edge_table.column("b").to_numpy())
+        # the labels are local data now: e's checkpoint blocks are dead
+        drop_checkpoint_blocks(e)
+        labels = edges.sparkSession.createDataFrame(
+            pa.table({"id": ids, "label": mins}))
+        return CCResult(labels=_with_isolated(labels, vertices),
+                        iterations=rounds, converged=True)
+
+    iterations, converged = 0, False
     for sync in range(1, max_iter + 1):
         # eager=False: the signature aggregate below is the action that
         # materializes the checkpoint — one Spark job per sync instead of
@@ -163,14 +256,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
         .join(labels.select("id"), "id", "left_anti") \
         .withColumn("label", F.col("id"))
     labels = labels.union(centers)
-    if vertices is not None:
-        isolated = (vertices.select(F.col("id").cast("long").alias("id"))
-                    .dropDuplicates(["id"])
-                    .join(labels.select("id"), "id", "left_anti")
-                    .withColumn("label", F.col("id")))
-        labels = labels.union(isolated)
     return CCResult(
-        labels=labels.withColumnRenamed("label", "cluster_id"),
+        labels=_with_isolated(labels, vertices),
         iterations=iterations,
         converged=converged,
     )
@@ -233,14 +320,8 @@ def hash_min_components(edges: DataFrame, vertices: DataFrame | None = None,
         prev = cur
 
     labels = labels.select(F.col("u").alias("id"), F.col("label"))
-    if vertices is not None:
-        isolated = (vertices.select(F.col("id").cast("long").alias("id"))
-                    .dropDuplicates(["id"])
-                    .join(labels.select("id"), "id", "left_anti")
-                    .withColumn("label", F.col("id")))
-        labels = labels.union(isolated)
     return CCResult(
-        labels=labels.withColumnRenamed("label", "cluster_id"),
+        labels=_with_isolated(labels, vertices),
         iterations=iterations,
         converged=converged,
     )

@@ -15,6 +15,7 @@ unaffected while the shuffle volume stays bounded.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -70,35 +71,19 @@ def release_stage_caches(cache_token: str | None = None) -> int:
         n += 1
     ckpts = _CHECKPOINTED.pop(cache_token, [])
     while ckpts:
-        try:
-            ckpts.pop()._jdf.queryExecution().analyzed().rdd() \
-                .unpersist(False)
-            n += 1
-        except Exception:
-            continue
+        n += drop_checkpoint_blocks(ckpts.pop())
     return n
 
 
-def pair_expansion_expr(ids_col: str, cap: int) -> Column:
-    """Array<long> (sorted, distinct) -> array<struct<a:long, b:long>>.
-
-    size<=cap  -> all unordered pairs (a<b);
-    size> cap  -> star edges (min, x) + chain edges (x_i, x_i+1).
-    Pure Catalyst expression: runs inside whole-stage codegen, no Python.
-    """
-    all_pairs = (
-        f"flatten(transform({ids_col}, (x, i) -> "
-        f"  transform(slice({ids_col}, i + 2, size({ids_col}) - i - 1), "
-        f"            y -> struct(x as a, y as b))))"
-    )
-    star = (f"transform(slice({ids_col}, 2, size({ids_col}) - 1), "
-            f"          y -> struct({ids_col}[0] as a, y as b))")
-    chain = (f"transform(slice({ids_col}, 2, size({ids_col}) - 1), "
-             f"          (y, i) -> struct({ids_col}[i] as a, y as b))")
-    return F.expr(
-        f"CASE WHEN size({ids_col}) <= {cap} THEN {all_pairs} "
-        f"ELSE array_union({star}, {chain}) END"
-    )
+def drop_checkpoint_blocks(df: DataFrame) -> bool:
+    """Unpersist the RDD under a localCheckpoint-ed frame (its LogicalRDD
+    leaf); DataFrame.unpersist() does not reach it. The frame must not be
+    executed afterwards. Returns False where the py4j surface differs."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        return True
+    except Py4JError:
+        return False
 
 
 # Loud-failure ceiling for the huge_group_rows=None caller guarantee: a
@@ -125,21 +110,20 @@ def pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str,
         .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
         .where(F.size("ids") >= 2)
     )
-    # STREAMED expansion (round-7, guide §5 — bound per-task memory): the
-    # old single-expression form (pair_expansion_expr) materialized ALL
-    # C(n,2) pair structs of a group as ONE in-memory array before its
-    # explode — a group of 2,941 anchor-sharing docs (sf1.0's planted
-    # substring block) built a 4.3M-struct array per group row and OOM'd an
-    # 8g heap. Two nested Generates emit the same pair set with per-row
-    # memory bounded by ONE partner slice (<= n ids): posexplode the member
+    # STREAMED expansion (round-7, guide §5 — bound per-task memory): a
+    # single-expression form materialized ALL C(n,2) pair structs of a
+    # group as ONE in-memory array before its explode — a group of 2,941
+    # anchor-sharing docs (sf1.0's planted substring block) built a
+    # 4.3M-struct array per group row and OOM'd an 8g heap. Two nested
+    # Generates emit the same pair set with per-row memory bounded by ONE
+    # partner slice (<= n ids): posexplode the member
     # list, then per member x at 0-based position i emit
     #   size<=cap : slice(ids, i+2, n-i-1)          (all y > x)
     #   size> cap : i==0 -> slice(ids, 2, n-1)      (star from the min)
     #               else -> [ids[i+1]]              (chain edge)
     # — identical to all-pairs / array_union(star, chain): star covers
     # (ids[0], ids[1]), chain rows start at i>=1, ids are sorted-distinct
-    # so no duplicates arise. pair_expansion_expr remains for small
-    # bounded-group callers.
+    # so no duplicates arise.
     rows = grouped.select("ids", F.posexplode("ids").alias("_i", "_x"))
     partners = F.when(
         F.size("ids") <= cap,

@@ -36,7 +36,8 @@ def get_spark(app_name: str = "wdd", cpus: int | None = None,
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     # shuffle/spill scratch on tmpfs: this sandbox has ONE virtio disk, so
     # shuffle I/O would serialize across cores and poison any scaling
-    # measurement (real clusters scale disks with nodes). 125 GiB RAM.
+    # measurement (real clusters scale disks with nodes). tmpfs pages count
+    # against host RAM: 15 GiB on the 4-core bench host.
     local_dir = os.environ.get("WDD_LOCAL_DIR", "/dev/shm/wdd-spark")
     try:
         os.makedirs(local_dir, exist_ok=True)

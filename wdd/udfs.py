@@ -52,11 +52,6 @@ def extract_features_udf(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"text": texts, "features": feats})
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([_extract.extract_text(h) for h in html])
-
-
 def make_signatures_udf(simhash_size: int = 64,
                         hash_name: str = DEFAULT.simhash_hash):
     """T1+T3+MinHash fused in ONE Arrow round: html -> struct(text,
